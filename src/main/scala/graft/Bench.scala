@@ -6,43 +6,34 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 object Bench {
+  /** Machine-speed calibration: a FIXED CPU-bound probe (codegen'd
+    * xxhash64 over an in-memory range, no I/O, no shuffle), one
+    * partition per core. Identical work every round, so the ratio of
+    * two rounds' readings measures ENVIRONMENT drift (frequency
+    * scaling, co-tenancy) and lets a reader of two artifacts separate
+    * "the box got slower" from "the code got slower" — cross-round
+    * totals on shared machines were observed to swing well outside any
+    * code delta. */
+  def calibProbe(spark: SparkSession, rows: Long): Double = {
+    val t0 = System.nanoTime()
+    // 24-bit slice: 2e8 rows x 2^24 max stays far inside a long, so
+    // the ANSI sum can't overflow (the full 64-bit hash would)
+    spark.range(0L, rows, 1L, spark.sparkContext.defaultParallelism)
+      .select(sum(shiftrightunsigned(xxhash64(col("id")), 40)).as("h")).head()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** One warm-up action. A failure is discarded — warm-up must not
+    * kill the bench — but logged with its tag, so a warmer that stopped
+    * warming is visible in the log. */
+  private def warm(tag: String)(body: => Any): Unit =
+    scala.util.Try(body).failed.foreach { e =>
+      System.err.println(s"[bench] warm-up $tag failed: ${e.getMessage}")
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like every other entry point (Verify/PlanDump/SparkSpec):
-      // session-TZ-sensitive queries (unix_timestamp on NTZ, to_date)
-      // must bucket identically across hosts or timings aren't
-      // comparable machine to machine
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // reclaim per-iteration reliable-checkpoint files (Lineage.truncate)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // The ContextCleaner only reclaims dead broadcasts/RDDs after a
-      // driver GC surfaces their weak references; its fallback periodic
-      // GC defaults to 30 min — longer than the whole bench. 1 min
-      // keeps cleanup flowing even between our explicit drops.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // FAIR job scheduling for the two streaming-audit rows' concurrent
-      // families/machines. HONEST ATTRIBUTION (r18, ADVICE r17): the
-      // mode conf alone is a NO-OP — without named pools every job sits
-      // in the single 'default' pool whose intra-pool order is FIFO.
-      // r17's "FIFO→FAIR" speedup was confounded with the concurrency-
-      // pool changes that landed the same round. Since r18 each family/
-      // machine thread names its own scheduler pool (StreamEquivalence
-      // sets spark.scheduler.pool per thread), which makes FAIR real;
-      // A/B'd on/off (spark.graft.fairpools=off) 2×7 interleaved runs
-      // at sf0.1/32 under co-tenant CPU+I/O load: NO measurable
-      // difference (mins 6.9-21 s both arms, noise-dominated). Kept
-      // because per-pool fair sharing is the correct shape when audits
-      // share an app with other tenants at production scale, and it
-      // costs nothing. Single-query rows see one job at a time either
-      // way.
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     // Measure queries, not session infrastructure. The first measured
     // query must pay NO residual warm-up, so the throwaway actions
@@ -52,9 +43,10 @@ object Bench {
     //    land on whichever query happens to read a table first,
     //    nondeterministically smearing seconds across the artifact
     //    (xxhash64(struct(*)) forces all columns through decode; a
-    //    bare count() would read only footers). Try-wrapped: a table
-    //    an engine can't raw-read (events' ns timestamps go through
-    //    Tables.events in real queries) must not kill the bench.
+    //    bare count() would read only footers). Each read goes through
+    //    `warm`: a table an engine can't raw-read (events' ns
+    //    timestamps go through Tables.events in real queries) must not
+    //    kill the bench, and its failure is logged, not swallowed.
     //    The summed value is the hash SHIFTED DOWN 40 bits (same trick
     //    as calibProbe, r21): ANSI mode is on, and a bare sum of full
     //    64-bit hashes overflows long partway through a large table —
@@ -73,7 +65,7 @@ object Bench {
     new java.io.File(sfDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       .foreach { f =>
-        scala.util.Try {
+        warm(s"scan ${f.getName}") {
           val df = spark.read.parquet(f.getPath)
           // .head(), NOT .count(): count() over an aggregate lets
           // Catalyst prune the hash down to a zero-column footer scan
@@ -87,7 +79,7 @@ object Bench {
       }
     // events needs the nanos conf (Tables.events) — the raw sweep above
     // skips it, so warm it through the real loader
-    scala.util.Try {
+    warm("scan events") {
       val ev = Tables.events(spark, sfDir)
       ev.select(shiftrightunsigned(
           xxhash64(struct(ev.columns.map(col).toIndexedSeq: _*)), 40).as("h"))
@@ -147,7 +139,7 @@ object Bench {
       // signature reads, not plan cost). Same xxhash64-over-struct
       // trick; try-wrapped like the table sweep.
       viewPaths.foreach { p =>
-        scala.util.Try {
+        warm(s"view $p") {
           val df = spark.read.parquet(p)
           // shifted like the table sweep — same ANSI overflow trap
           df.select(shiftrightunsigned(
@@ -205,7 +197,7 @@ object Bench {
         "sql_pricing", "sql_correlated", "sql_cte_window",
         "sql_ddl_ctas", "profile_fanout",
         "maint_snapshot_diff").foreach { n =>
-        scala.util.Try {
+        warm(s"codegen $n") {
           val plan = Registry.byName(n).run(spark, sfDir).queryExecution.executedPlan
           org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
         }
@@ -239,7 +231,7 @@ object Bench {
           .start()
         q.awaitTermination()
       }
-      scala.util.Try {
+      warm("stream fm") {
         import graft.streaming.StatefulDemos
         val fmS = spark.newSession()
         fmS.conf.set("spark.sql.shuffle.partitions", "1")
@@ -248,7 +240,7 @@ object Bench {
             fmS, StatefulDemos.chunkedEventsStream(fmS, sfDir).filter(col("user_id") === -1)),
           "fm")
       }
-      scala.util.Try {
+      warm("stream tws") {
         import graft.streaming.StatefulDemos
         val twsS = spark.newSession()
         twsS.conf.set("spark.sql.shuffle.partitions", "1")
@@ -313,23 +305,7 @@ object Bench {
     def gcMillis: Long = gcBeans.map(_.getCollectionTime).sum
     val memBean = ManagementFactory.getMemoryMXBean
 
-    // Machine-speed calibration: a FIXED CPU-bound probe (codegen'd
-    // xxhash64 over an in-memory range, no I/O, no shuffle) timed
-    // after warm-up. Identical work every round, so the ratio of two
-    // rounds' calib_sec measures ENVIRONMENT drift (frequency scaling,
-    // co-tenancy) and lets a reader of two artifacts separate "the box
-    // got slower" from "the code got slower" — cross-round totals on
-    // shared machines were observed to swing well outside any code
-    // delta.
-    def calibProbe(rows: Long): Double = {
-      val t0 = System.nanoTime()
-      // 24-bit slice: 2e8 rows x 2^24 max stays far inside a long, so
-      // the ANSI sum can't overflow (the full 64-bit hash would)
-      spark.range(0L, rows, 1L, cpus.toInt)
-        .select(sum(shiftrightunsigned(xxhash64(col("id")), 40)).as("h")).head()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val calibSec = calibProbe(200000000L)
+    val calibSec = calibProbe(spark, 200000000L)
     System.err.println(f"[bench] calib_sec=$calibSec%.3f (fixed 200M-row xxhash64 probe)")
 
     // Storage-speed calibration: the I/O twin of calib_sec. calib_sec
@@ -408,7 +384,7 @@ object Bench {
       "stream_state_api_parity"   -> "par")
     val auditEnv = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
     def probeAuditEnv(tag: String): Unit = {
-      val c = calibProbe(50000000L)
+      val c = calibProbe(spark, 50000000L)
       val i = ioProbe(32L << 20)
       auditEnv(tag) = (c, i)
       System.err.println(f"[bench] aenv $tag%-7s calib=$c%.3f io=$i%.3f")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,22 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional local-iteration filter; driver passes exactly 2 args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // reclaim per-iteration reliable-checkpoint files (Dedup.truncate)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // FAIR job scheduling, as in Bench — effective only because the
-      // audit rows name per-family/machine scheduler pools since r18
-      // (see Bench.scala's attribution note: the mode conf alone is a
-      // no-op, and the measured effect of real FAIR is ~nil at test
-      // scale; kept for the production multi-tenant shape)
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

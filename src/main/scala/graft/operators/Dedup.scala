@@ -306,14 +306,14 @@ object Dedup {
     * doc that HAS shingles (0/nb = 0), so the filter only removes the
     * NaN artifact, never a real pair. */
   /** The ngram row's per-doc signature frame (doc_id, lang, s = sorted
-    * distinct 64-bit bigram hashes, ns, bkt), shared with the
-    * [[graft.NgramFloor]] decomposition probe.
+    * distinct 64-bit bigram hashes, ns, bkt).
     *
     * Bigram hashes are a ROLLING MIX over per-token xxhash64 — h(t1)
     * XOR rot13(h(t2)) — never materialized strings (r19, VERDICT r18
     * #6): the r18 spelling concatenated every bigram string and md5'd
-    * it, and NgramFloor measured that build at 0.93 s of the row's
-    * 1.76 s warm floor at sf0.1, PAID TWICE (once per join side). The
+    * it, and a stage-by-stage probe measured that build at 0.93 s of
+    * the row's 1.76 s warm floor at sf0.1, PAID TWICE (once per join
+    * side). The
     * mix is [[graft.operators.TextAnalysis.contamShinglesBuild]]'s
     * technique at n = 2 (its measured 7× there), and position
     * sensitivity is preserved (rot13 of the second token ≠ rot13 of
@@ -434,7 +434,7 @@ object Dedup {
     * 169,253 distinct candidates from 547,195 intermediate rows vs the
     * grid's 245,817 generate-and-verify — the dense bigram space
     * (≤ 31² shingles) makes every prefix element corpus-hot, so the
-    * grid wins on total volume (NgramFloor's wall-clock A/B
+    * grid wins on total volume (a wall-clock A/B
     * corroborates: 1.43 s grid vs 1.1-1.5 s prefix across windows, a
     * wash — first-order model, kernel work per grid candidate costs
     * more than a hash-join intermediate row). On a sparse vocabulary
@@ -1492,11 +1492,11 @@ object Dedup {
     // Interleaved A/B at sf0.1/32, min/median of 5: bestkeep 3.04/3.18
     // (round 2: 1988 → 56 edges) vs 3.34/3.58; forcing round 2 on the
     // scoped rows regressed them ~+0.3 s each.
-    val maxRounds = edges.sparkSession.conf
-      .getOption("spark.graft.cc.rounds").map(_.toInt).getOrElse(if (recontract) 3 else 1)
-    val minEdges = edges.sparkSession.conf
-      .getOption("spark.graft.cc.recontract.minedges").map(_.toLong).getOrElse(1024L)
-    var levelMaps = List(l0) // innermost first
+    val maxRounds = if (recontract) 3 else 1
+    val minEdges = 1024L
+    // outermost (coarsest) level first: the unwind below maps labels
+    // from the top quotient back down to doc_ids
+    var levelMaps = List(l0)
     var q = ce
     var round = 1
     var qn = -1L

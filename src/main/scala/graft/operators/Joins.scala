@@ -402,18 +402,12 @@ object Joins {
     * spread over `salts` reducers. The final groupBy re-meets the hot
     * key but map-side partial aggregation reduces each partition to
     * one row per key first — the classic skew split: JOIN work spreads
-    * by salt, AGG work collapses map-side. Two BENCH-ONLY knobs make
-    * the straggler measurable from BenchRepeat alone:
-    * `spark.graft.skewstress.salts` (default 16; 1 = the UNSALTED
-    * degenerate plan) and `spark.graft.skewstress.fanout` (default 1;
-    * N replicates each fact row N× before salting — sf0.1's 90 k hot
-    * rows alone are too few for a visible straggler on 32 cores: the
-    * salted/unsalted A/B TIES at 0.65 s min-of-3 there. At fanout=200
-    * — 18 M rows on the hot key — salted-16 wins 4.02 s vs 6.72 s
-    * min-of-3, the straggler made visible and split; SCALING.md §r16).
-    * The registry row always runs salts=16, fanout=1. Oracle:
-    * the plain unsalted join — the salt must be invisible in the
-    * result. */
+    * by salt, AGG work collapses map-side. sf0.1's 90 k hot rows alone
+    * are too few for a visible straggler (the salted/unsalted A/B TIES
+    * at 0.65 s min-of-3 on 32 cores); replicating each fact row 200×
+    * (18 M rows on the hot key) made it visible and split: salted-16
+    * 4.02 s vs unsalted 6.72 s min-of-3 (SCALING.md §r16). Oracle: the
+    * plain unsalted join — the salt must be invisible in the result. */
   val skewStress: Q = Q(
     "join_skew_stress",
     Some(
@@ -426,20 +420,14 @@ object Joins {
         "GROUP BY 1 ORDER BY 1"
     ),
     (spark, dir) => {
-      val salts = spark.conf
-        .getOption("spark.graft.skewstress.salts").map(_.toInt).getOrElse(16)
-      val fanout = spark.conf
-        .getOption("spark.graft.skewstress.fanout").map(_.toInt).getOrElse(1)
+      val salts = 16
       val hk = when(col("user_id") % 10 =!= 0, lit(0L)).otherwise(col("user_id"))
-      val base = Tables
+      // `rep` = 1 stays in the salt's hash input: dropping it would
+      // re-salt every row and change the plan PLANS.md records
+      val fact = Tables
         .events(spark, dir)
         .select(hk.as("skew_key"), col("value"), col("event_id"))
-      // fanout > 1 is a bench-only stress amplifier (the oracle holds
-      // only at 1); kept off the registry plan entirely at default
-      val inflated =
-        if (fanout <= 1) base.withColumn("rep", lit(1))
-        else base.withColumn("rep", explode(sequence(lit(1), lit(fanout))))
-      val fact = inflated
+        .withColumn("rep", lit(1))
         .withColumn("salt", pmod(xxhash64(col("event_id"), col("rep")), lit(salts)).cast("int"))
       val dim = Tables
         .events(spark, dir)

@@ -185,37 +185,21 @@ object StreamEquivalence {
     // run's entries mixed with this run's, and Bench publishes that
     // blend as the run's per-family attribution.
     familySeconds.synchronized(familySeconds.clear())
-    // Per-family replay sessions at 4 shuffle partitions — the parity
+    // Per-family replay sessions at 1 shuffle partition — the parity
     // rows' legSession rationale applied to the stateless family
     // replays (r21): AQE is unavailable inside streaming micro-batches
     // AND inside their foreachBatch bodies' derived jobs is per-batch,
     // so every per-batch shuffle (the screens' joins, the bm25/bpe
-    // aggregates) ran at the engine-wide 32 partitions over a sliced
-    // input of a few thousand rows — 32 near-empty tasks of pure
+    // aggregates) ran at the engine-wide partition count over a sliced
+    // input of a few thousand rows — near-empty tasks of pure
     // scheduling overhead per shuffle per micro-batch. newSession
     // scopes the conf away from the shared session (ADVICE r15's
     // isolation argument); results are partitioning-independent (all
     // merges are keyed and the verdicts reduce to scalar flags).
-    // A/B knob (VERDICT r21 #1): spark.graft.streameq.famsess =
-    //   perfam (default) — one newSession per family (the r21 shape)
-    //   pooled           — ONE 4-partition newSession shared by all 17
-    //   shared           — the main session verbatim (the r20 shape)
-    val famSessMode = spark.conf
-      .getOption("spark.graft.streameq.famsess").getOrElse("perfam")
-    val famParts = spark.conf
-      .getOption("spark.graft.streameq.famparts").getOrElse("1")
-    lazy val pooledFamSession: SparkSession = {
+    def famSession(): SparkSession = {
       val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", famParts)
+      s.conf.set("spark.sql.shuffle.partitions", "1")
       s
-    }
-    def famSession(): SparkSession = famSessMode match {
-      case "shared" => spark
-      case "pooled" => pooledFamSession
-      case _ =>
-        val s = spark.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", famParts)
-        s
     }
     def bm25(): (String, (Int, Int, Int)) = {
       val scope = pmod(col("doc_id"), lit(8)) === 0
@@ -453,57 +437,27 @@ object StreamEquivalence {
     // order, so the report rows are deterministic.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    // Default pool = ALL families since r17. The r17 comment credited
-    // FAIR scheduling; r18's A/B (ADVICE r17) showed the FAIR conf was
-    // a no-op without named pools, so the r17 speedup belongs to the
-    // CONCURRENCY-POOL change itself plus the one-job verdicts. The
-    // pool-size ordering was re-confirmed r18 in one window at sf0.1/32
-    // under co-tenant CPU+I/O load: all-17 min 11.0/14.7 s vs pool-8's
-    // 11.8/9.9 vs pool-4's 18.4 — 17 and 8 trade within noise, 4 loses
-    // clearly; all-17 stays the default (the families are overhead-
-    // bound, not slot-bound, so full overlap can't starve). The knob
-    // remains for smaller boxes where peak memory across live streams
-    // could matter.
-    val poolSize = spark.conf
-      .getOption("spark.graft.streameq.pool")
-      .map(_.toInt)
-      .getOrElse(rows.size)
-      .max(1)
-      .min(rows.size)
-    // Under a BOUNDED pool, submission order is makespan: the heavy
-    // replay families (ingest screens, pair_delta, edge_view, the code
-    // tables) must start in the first wave or they anchor the tail
-    // after every light sig-table twin has drained. Longest-job-first
-    // by the measured per-family cost ranking (stream_eq_families
-    // stanzas, stable across rounds); with an unbounded pool override
-    // this ordering is inert. Results are still collected in
-    // declaration order, so the report rows don't depend on it.
+    // One thread per family since r17. The r17 comment credited FAIR
+    // scheduling; r18's A/B (ADVICE r17) showed the FAIR conf was a
+    // no-op without named pools, so the r17 speedup belongs to the
+    // CONCURRENCY change itself plus the one-job verdicts. Pool size
+    // was A/B'd r18 in one window at sf0.1/32 under co-tenant CPU+I/O
+    // load: all-17 min 11.0/14.7 s vs 8 threads' 11.8/9.9 vs 4's 18.4
+    // — 17 and 8 trade within noise, 4 loses clearly; the families are
+    // overhead-bound, not slot-bound, so full overlap can't starve.
     // a 17th family thunk without a matching tag would be SILENTLY
     // dropped by the zip below (zip truncates to the shorter list) —
     // and if the oracle VALUES list were also left untouched the report
     // would still row-match, shrinking coverage with no failure
     require(rows.size == rowNames.size,
       s"streameq family/tag count drift: ${rows.size} thunks vs ${rowNames.size} tags")
-    val costRank: Map[String, Int] = Seq(
-      // r15 measured order under the sliced audits (BenchRepeat
-      // min-of-3 at sf0.1/32): the minhash screen and the basket
-      // replay anchor the tail, the sig-table twins drain fast
-      "ingest_screen_minhash", "edge_view", "ingest_screen_contam",
-      "bm25_index", "bpe_vocab", "ingest_screen_exact", "pq_codes",
-      "ivfpq_codes", "cdc_chunks", "mm_features", "simhash_sigs",
-      "pair_delta", "dedup_sigs", "minhash_sigs", "lsh_sigs",
-      "ivf_assignments", "contam_shingles"
-    ).zipWithIndex.toMap
-    val submitOrder = rows.zip(rowNames)
-      .sortBy { case (_, name) => costRank.getOrElse(name, Int.MaxValue) }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(rows.size)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val fairPools = spark.conf.getOption("spark.graft.fairpools").forall(_ != "off")
     val done =
-      try {
-        val futures = submitOrder.map { case (t, name) =>
-          name -> Future {
+      try Await.result(
+        Future.sequence(rows.zip(rowNames).map { case (t, name) =>
+          Future {
             // Distinct per-family scheduler pool (ADVICE r17): with
             // spark.scheduler.mode=FAIR but every job in the single
             // 'default' pool, INTRA-pool scheduling is FIFO and the
@@ -512,20 +466,16 @@ object StreamEquivalence {
             // across live families. The local property is thread-local
             // and inherited by each leg's stream-execution thread
             // (InheritableThreadLocal), so streaming micro-batch jobs
-            // land in the family's pool too. `spark.graft.fairpools=off`
-            // disables the naming for same-window A/Bs (everything then
-            // shares the FIFO 'default' pool — the pre-r18 behavior).
-            if (fairPools)
-              spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft_eq_$name")
+            // land in the family's pool too.
+            spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft_eq_$name")
             try timed(t)
             finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
           }
-        }.toMap
-        Await.result(
-          Future.sequence(rowNames.map(futures(_))), Duration.Inf)
-      } finally pool.shutdown()
+        }),
+        Duration.Inf)
+      finally pool.shutdown()
     // the tag list and the thunks' self-reported names must agree, or
-    // the LJF ranking silently ranks the wrong family
+    // the per-family pools and timings carry the wrong names
     require(done.map(_._1) == rowNames,
       s"streameq tag drift: ${done.map(_._1)} vs $rowNames")
     done.map { case (f, (ne, rm, be)) => (f, ne, rm, be) }
@@ -584,16 +534,15 @@ object StreamEquivalence {
     *     and any streaming query started concurrently in that window
     *     silently inherited it (ADVICE r15) — newSession() shares the
     *     SparkContext but scopes the conf;
-    *   - shuffle partitions drop to 4: a stateful operator spins up
+    *   - shuffle partitions drop to 1: a stateful operator spins up
     *     one state store instance PER SHUFFLE PARTITION per
-    *     micro-batch, and at the engine-wide 32 that fixed overhead —
+    *     micro-batch, and at the engine-wide count that fixed overhead —
     *     not the sliced data — dominated the audit's wall time
     *     (measured 36 s → see SCALING.md; the slice carries a few
     *     thousand rows). */
   private def legSession(spark: SparkSession, tws: Boolean): SparkSession = {
     val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.getOption("spark.graft.stateparity.legparts").getOrElse("1"))
+    s.conf.set("spark.sql.shuffle.partitions", "1")
     if (tws) s.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -931,10 +880,7 @@ object StreamEquivalence {
     // full overlap wins.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    val poolSize = spark.conf
-      .getOption("spark.graft.stateparity.pool").map(_.toInt)
-      .getOrElse(machines.size).max(1).min(machines.size)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(machines.size)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val done =
@@ -944,8 +890,7 @@ object StreamEquivalence {
             // per-machine scheduler pool — same FAIR rationale as the
             // equivalence report's per-family pools (ADVICE r17); the
             // two legs' threads inherit the machine's pool
-            if (spark.conf.getOption("spark.graft.fairpools").forall(_ != "off"))
-              spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft_par_$n")
+            spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft_par_$n")
             try timedM(n, f)
             finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
           }

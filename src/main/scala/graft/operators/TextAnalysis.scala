@@ -1812,8 +1812,7 @@ object TextAnalysis {
     * pool exhausts at 89). */
   private[graft] def bpeTrainLoopOn(
       words: DataFrame,
-      nMerges: Int,
-      onMerge: Int => Unit = _ => ()): Seq[(Int, String, Long)] = {
+      nMerges: Int): Seq[(Int, String, Long)] = {
     import org.apache.spark.storage.StorageLevel
     // one corpus scan; iteration i reads generation i-1's vocab-sized cache
     var w = words.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1844,7 +1843,6 @@ object TextAnalysis {
         w =
           if (i % 16 == 0) Lineage.truncate(next) // bounded lineage at any merge count
           else next.persist(StorageLevel.MEMORY_AND_DISK)
-        onMerge(i) // instrumentation hook (BpeDepth's curve); no-op in every serving path
         i += 1
       }
     }

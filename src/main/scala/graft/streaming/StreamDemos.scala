@@ -1068,14 +1068,7 @@ object StreamDemos {
     * through both topologies and print row counts. */
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val tumbled = runToCompletion(spark, tumblingCounts(spark, dir), "tumbling_demo")
     val sessions = runToCompletion(spark, sessionCounts(spark, dir), "session_demo")
     println(s"stream tumbling windows: ${tumbled.count()} rows")

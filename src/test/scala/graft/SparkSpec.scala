@@ -3,25 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites — mirrors the driver's
-  * Verify session shape (SURVEY §3.2): 4 threads, 4 shuffle
-  * partitions, UTC. One session per JVM; scalatest suites share it.
+/** Shared local SparkSession for all suites — the [[Sessions.local]]
+  * conf set Bench and Verify run under: 4 threads, 4 shuffle
+  * partitions, UTC, FAIR. One session per JVM; scalatest suites share
+  * it.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      // local[4, 2]: 2 task attempts, like a real cluster (default 4) —
-      // lets SinkRetrySpec prove exactly-once under task retry; inert
-      // for every other suite (their tasks don't fail)
-      .master("local[4, 2]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[4, 2]: 2 task attempts, like a real cluster (default 4) —
+  // lets SinkRetrySpec prove exactly-once under task retry; inert for
+  // every other suite (their tasks don't fail). 4 cores pinned, not
+  // SPARK_GRAFT_CPUS, so plan-shape pins see the same partition count
+  // on every host.
+  lazy val spark: SparkSession = Sessions.local(cpus = 4, taskAttempts = 2)
   val sf: String = "/root/testdata/sf0.001"
 }
 
