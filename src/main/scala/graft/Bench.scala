@@ -389,6 +389,18 @@ object Bench {
       auditEnv(tag) = (c, i)
       System.err.println(f"[bench] aenv $tag%-7s calib=$c%.3f io=$i%.3f")
     }
+    // One timed run of `q`: wall seconds of `run` + `count()`, or None
+    // when it throws. Every pass below times through here, and a throw
+    // is logged, never folded into a small healthy-looking number.
+    def timedRun(q: Q): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { q.run(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+          None
+      }
+    }
     var qIdx = 0
     // Registry.all DECLARATION order — not SparkEntry.queries, whose
     // Map iteration order is hash-scrambled: with a scrambled order the
@@ -402,9 +414,9 @@ object Bench {
       val name = q.name
       auditTag.get(name).foreach(probeAuditEnv)
       val gc0 = gcMillis
-      val t0 = System.nanoTime()
-      try { q.run(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
+      // a row that threw is recorded as the documented -1 sentinel and
+      // kept out of `total` and both rerun passes
+      val dt = timedRun(q).getOrElse(-1.0)
       val gcDt = gcMillis - gc0
       val dropped = dropDeadBlocks()
       qIdx += 1
@@ -423,22 +435,19 @@ object Bench {
     // run measures the memo hit, not the plan. The flag lives on the Q
     // itself (Registry.scala) so a future memoizing row cannot silently
     // corrupt this pass by being missing from a list here.
-    val min2 = results
+    val ok = results.filter(_._2 >= 0)
+    val min2 = ok
       .filter(r => !Registry.byName(r._1).memoizes)
       .sortBy(-_._2)
       .take(10)
       .map { case (name, first, gcFirst) =>
-        val q   = Registry.byName(name)
         val gc0 = gcMillis
-        val t0  = System.nanoTime()
         // A FAILED rerun must not contribute its time-to-failure as
         // `second`: a fast crash (OOM, lost executor) would yield an
         // artificially tiny min(first, second) — inverting exactly the
         // cold-vs-expensive attribution this pass exists to make
         // (ADVICE r12). MaxValue makes min() keep the honest first run.
-        val second =
-          try { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => Double.MaxValue }
+        val second = timedRun(Registry.byName(name)).getOrElse(Double.MaxValue)
         val gcSecond = gcMillis - gc0
         dropDeadBlocks()
         System.err.println(f"[bench] min2 $name%-28s first=$first%7.3f s second=${math.min(second, 9999.0)}%7.3f s gc=$gcFirst%d/$gcSecond%d ms")
@@ -475,7 +484,7 @@ object Bench {
     // Contention-retry readings (VERDICT r18 #5): tag -> (first mc
     // reading, retry mc reading), populated only when a retry fired.
     val mcRetries = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val min2MemoCleared = results
+    val min2MemoCleared = ok
       .filter(r => Registry.byName(r._1).memoizes)
       .sortBy(-_._2)
       .take(10)
@@ -488,13 +497,8 @@ object Bench {
       .map { case (name, first, _) =>
         Registry.clearMemos()
         auditTag.get(name).foreach(t => probeAuditEnv(t + "_mc"))
-        val q  = Registry.byName(name)
-        def timedRun(): Double = {
-          val t0 = System.nanoTime()
-          try { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => Double.MaxValue }
-        }
-        val second = timedRun()
+        def rerun(): Double = timedRun(Registry.byName(name)).getOrElse(Double.MaxValue)
+        val second = rerun()
         dropDeadBlocks()
         System.err.println(
           f"[bench] min2mc $name%-28s first=$first%7.3f s second=${math.min(second, 9999.0)}%7.3f s (memo cleared)")
@@ -516,7 +520,7 @@ object Bench {
             case (c, io) if BenchFmt.retryTriggered(c, io, calibSec) =>
               Registry.clearMemos()
               probeAuditEnv(t + "_mc2")
-              val r = timedRun()
+              val r = rerun()
               dropDeadBlocks()
               // a run that THREW records the sentinel -1, not the 9999.0
               // clamp — a failed run must be distinguishable in the
@@ -544,7 +548,7 @@ object Bench {
     // could not explain its own slowest number).
     val gcs = results.map { case (k, _, g) => s"\"" + k + "\":" + g }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = ok.map(_._2).sum
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_ms":$gcs,"sf":"$sfDir"}""")
     // The full line above (~2.8 KB for 97 queries) overflows the
     // harness's 2 KB stdout-tail buffer, so it has never parsed

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, Memos, Q, Tables}
+import graft.{Det, Memo, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1347,21 +1347,8 @@ object Dedup {
   // function of the manifest), and — the r11 lesson the path memos
   // taught — no SparkSession is ever strongly retained by an
   // object-lifetime cache.
-  private val clusterCache =
-    scala.collection.mutable.Map.empty[(String, Long), Seq[(Long, Long, Boolean)]]
-  private val clusterComputes = Memos.counter()
-  Memos.register(Memos.Handle(
-    "dedup.clusterCache",
-    () => clusterCache.synchronized(clusterCache.size),
-    () => clearClusterCache(),
-    () => clusterComputes.get()
-  ))
-
-  /** Test hook: drop the memoized labels so a spec can force the
-    * iterative path to actually re-run (CheckpointSpec re-exercises it
-    * under the reliable-checkpoint knob, which the memo would bypass). */
-  private[graft] def clearClusterCache(): Unit =
-    clusterCache.synchronized(clusterCache.clear())
+  private[graft] val clusterCache =
+    new Memo[(String, Long), Seq[(Long, Long, Boolean)]]("dedup.clusterCache")
 
   /** `scope` bounds the clustered corpus to `doc_id < scope`. The
     * registry rows pin the default [[ClusterProbeScope]] (shared with
@@ -1373,14 +1360,8 @@ object Dedup {
       dir: String,
       scope: Long = ClusterProbeScope
   ): DataFrame = {
-    val key = (pairTablePath(spark, dir), scope)
-    val labels = clusterCache.synchronized(clusterCache.get(key)) match {
-      case Some(cached) => cached
-      case None =>
-        val computed = computeClusterLabels(spark, dir, scope)
-        clusterComputes.incrementAndGet()
-        clusterCache.synchronized(clusterCache.update(key, computed))
-        computed
+    val labels = clusterCache((pairTablePath(spark, dir), scope)) {
+      computeClusterLabels(spark, dir, scope)
     }
     spark.createDataFrame(labels).toDF("doc_id", "cluster", "is_survivor")
   }
@@ -1423,7 +1404,7 @@ object Dedup {
 
   /** The CC core shared by the scoped probe ([[computeClusterLabels]])
     * and the full-manifest best-of-cluster keeper
-    * ([[bestOfClusterDropped]]): one Borůvka-style star-contraction
+    * ([[bestOfClusterDroppedFrame]]): one Borůvka-style star-contraction
     * round, then iterative min-label propagation with pointer doubling
     * over the CONTRACTED quotient graph. Seeded from `seeds` (one
     * doc_id column — a node absent from every edge keeps its own id as
@@ -1625,34 +1606,19 @@ object Dedup {
     * 100 TB: the input is the persisted manifest (never a re-screen);
     * CC touches only dup-graph endpoints, the keeper argmax moves one
     * row per cluster. The drop set stays a doc-keyed FRAME the whole
-    * way (r21, VERDICT r20 #1): [[bestOfClusterDroppedFrame]] returns
-    * the `labels ⟕anti keepers` anti-join, checkpointed, and the
-    * bestkeep corpus build joins THAT — no driver-side collect and no
-    * LocalRelation of collected ids anywhere in the composed plan, so
-    * the shape survives a duplicate-heavy corpus where the endpoint
-    * set is O(corpus). The collected-Seq variant below remains ONLY
-    * for the spec/probe paths (DedupSpec's union-find oracle compares
-    * whole drop sets driver-side anyway), memoized per manifest path
-    * like [[clusterCache]]: the path encodes (input fingerprint,
-    * buildVersion), so regeneration invalidates mechanically. */
-  private val bestKeepCache =
-    scala.collection.mutable.Map.empty[String, Seq[Long]]
-  private val bestKeepComputes = Memos.counter()
-  Memos.register(Memos.Handle(
-    "dedup.bestKeepCache",
-    () => bestKeepCache.synchronized(bestKeepCache.size),
-    () => bestKeepCache.synchronized(bestKeepCache.clear()),
-    () => bestKeepComputes.get()
-  ))
-
-  /** The drop set as an UNCOLLECTED one-column (doc_id) frame — the
-    * scale shape: CC labels over the persisted manifest's endpoints,
-    * the per-cluster (n_chars desc, doc_id) argmax via TopKPerGroup,
-    * then labels anti-join keepers. Checkpointed before return so the
-    * consumer's plan reads one materialized LogicalRDD instead of
-    * re-deriving the manifest scan + CC lineage per reference (the
-    * iterative CC is eager anyway — the truncate adds one tiny job
-    * over the already-computed labels). */
+    * way (r21, VERDICT r20 #1): this returns the `labels ⟕anti
+    * keepers` anti-join as an UNCOLLECTED one-column (doc_id) frame,
+    * and the bestkeep corpus build joins THAT — no driver-side collect
+    * and no LocalRelation of collected ids anywhere in the composed
+    * plan, so the shape survives a duplicate-heavy corpus where the
+    * endpoint set is O(corpus). Only DedupSpec's union-find oracle
+    * collects it, to compare whole drop sets driver-side.
+    *
+    * Checkpointed before return so the consumer's plan reads one
+    * materialized LogicalRDD instead of re-deriving the manifest scan
+    * + CC lineage per reference (the iterative CC is eager anyway —
+    * the truncate adds one tiny job over the already-computed
+    * labels). */
   private[graft] def bestOfClusterDroppedFrame(
       spark: SparkSession, dir: String): DataFrame = {
     val pairs = spark.read
@@ -1670,22 +1636,6 @@ object Dedup {
       .select(col("doc_id"))
     graft.Lineage.truncate(
       labels.select(col("doc_id")).join(keepers, Seq("doc_id"), "left_anti"))
-  }
-
-  private[graft] def bestOfClusterDropped(spark: SparkSession, dir: String): Seq[Long] = {
-    val key = pairTablePath(spark, dir)
-    bestKeepCache.synchronized(bestKeepCache.get(key)) match {
-      case Some(cached) => cached
-      case None =>
-        val computed = bestOfClusterDroppedFrame(spark, dir)
-          .collect()
-          .map(_.getLong(0))
-          .toSeq
-          .sorted
-        bestKeepComputes.incrementAndGet()
-        bestKeepCache.synchronized(bestKeepCache.update(key, computed))
-        computed
-    }
   }
 
   /** The curation capstone: what the dedup stage did to the corpus,

@@ -600,7 +600,7 @@ object Sampling {
     * near-dup stage → decontamination → quality-ordered token-budget
     * cut → 4000-char packing → per-lang report — but the near-dup
     * stage keeps each dup cluster's HIGHEST-QUALITY member
-    * ([[Dedup.bestOfClusterDropped]]: n_chars desc, doc_id tiebreak,
+    * ([[Dedup.bestOfClusterDroppedFrame]]: n_chars desc, doc_id tiebreak,
     * over connected components of the persisted pair manifest) instead
     * of the smaller-id rule. Funnel consistency with the sibling row is
     * structural: n_raw/n_quality/n_exact are policy-independent

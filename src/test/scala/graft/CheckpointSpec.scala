@@ -22,14 +22,14 @@ class CheckpointSpec extends SparkSuite {
     // rather than assuming suite order. Clear the label memo too so
     // BOTH runs exercise the real iterative path.
     org.apache.spark.graft.CheckpointDirAccess.clear(spark.sparkContext)
-    operators.Dedup.clearClusterCache()
+    operators.Dedup.clusterCache.clear()
     val dedupLocal = rows(dedup)
     val prLocal    = rows(pr)
 
     val dir: Path = Files.createTempDirectory("graft_ckpt_spec")
     try {
       spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
-      operators.Dedup.clearClusterCache()
+      operators.Dedup.clusterCache.clear()
       val dedupReliable = rows(dedup)
       assert(
         spark.sparkContext.getCheckpointDir.isDefined,

@@ -260,7 +260,8 @@ class DedupSpec extends SparkSuite {
     // oracle (star-contracted recursive closure): plain union-find over
     // the full manifest plus a per-component (n_chars desc, doc_id)
     // argmax, all driver-side.
-    val dropped = operators.Dedup.bestOfClusterDropped(spark, sf)
+    val dropped = operators.Dedup.bestOfClusterDroppedFrame(spark, sf)
+      .collect().map(_.getLong(0)).toSeq.sorted
     val pairs = spark.read.parquet(operators.Dedup.pairTablePath(spark, sf))
       .select(col("ida"), col("idb")).collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty, "fixture manifest must contain pairs")

@@ -34,9 +34,9 @@ class MemoCouplingSpec extends SparkSuite {
   test("every memoizes=true row recomputes into a REGISTERED cache after clearMemos") {
     for (q <- memoRows) {
       Registry.clearMemos()
-      assert(Memos.all.forall(_.size() == 0),
+      assert(Memos.all.forall(_.size == 0),
         s"clearMemos left a non-empty cache before ${q.name}: " +
-          Memos.all.filter(_.size() > 0).map(_.name).mkString(","))
+          Memos.all.filter(_.size > 0).map(_.name).mkString(","))
       val before = Memos.totalComputes()
       q.run(spark, sf).count()
       val after = Memos.totalComputes()

@@ -79,7 +79,7 @@ class RecoverySpec extends SparkSuite {
     // files-written check must demand regular FILES, not a non-empty
     // listing. (Both held vacuously before round 7.)
     org.apache.spark.graft.CheckpointDirAccess.clear(spark.sparkContext)
-    operators.Dedup.clearClusterCache()
+    operators.Dedup.clusterCache.clear()
     val local = operators.Dedup.dedupClusters.run(spark, sf).collect().toSet
 
     // Flip the session to reliable checkpointing — on a real cluster
@@ -88,7 +88,7 @@ class RecoverySpec extends SparkSuite {
     val ckptDir = Files.createTempDirectory("graft_reliable_ckpt")
     try {
       spark.sparkContext.setCheckpointDir(ckptDir.toString)
-      operators.Dedup.clearClusterCache()
+      operators.Dedup.clusterCache.clear()
       val reliable = operators.Dedup.dedupClusters.run(spark, sf).collect().toSet
 
       assert(reliable == local, "reliable-checkpoint path changed the clustering result")
