@@ -219,18 +219,9 @@ object Bench {
     // as stream_warm_sec — never hidden, never touching any memo.
     val streamWarmSec = {
       val t0 = System.nanoTime()
-      def warmLeg[T](ds: org.apache.spark.sql.Dataset[T], tag: String): Unit = {
-        val ckpt = graft.Staging.dir(s"bench_stream_warm/$tag")
-        val q = ds.writeStream
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[T], _: Long) =>
-            b.write.format("noop").mode("overwrite").save(); ()
-          }
-          .start()
-        q.awaitTermination()
-      }
+      def warmLeg(ds: org.apache.spark.sql.Dataset[_], tag: String): Unit =
+        graft.streaming.drain(ds, "update", Some(graft.Staging.dir(s"bench_stream_warm/$tag")))(
+          _.write.format("noop").mode("overwrite").save())
       warm("stream fm") {
         import graft.streaming.StatefulDemos
         val fmS = spark.newSession()

@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.{ExplainMode, FormattedMode, SimpleMode}
   *   - `calib [n]` — [[Bench.calibProbe]]'s 200M-row reading, `n` times.
   *   - `plans audit` — one line of operator counts per registry row.
   *   - `plans dump [out]` — formatted plans of the headline rows into
-  *     PLANS.md (or `out`).
+  *     PLANS.md (or `out`), run-specific ids and paths normalised.
   *   - `plans file <dir> <suffix> <query> ...` — one formatted plan
   *     file per named query, for before/after plan evidence.
   */
@@ -100,6 +100,18 @@ object Dev {
     df.queryExecution.explainString(mode)
       .replaceAll("(0x[0-9A-Fa-f]{16})[0-9A-Fa-f]{48,}", "$1<binary literal, truncated>")
 
+  /** `plan` with the tokens that differ from run to run on the same
+    * tree replaced by fixed ones, so two dumps diff only where a plan
+    * changed: expression ids (`#N`), exchange plan ids, RDD ids, the
+    * per-JVM [[Staging]] root and the ViewStore fingerprint dirs (the
+    * build-version suffix stays). */
+  private[graft] def normalise(plan: String): String = plan
+    .replaceAll("#\\d+", "#N")
+    .replaceAll("plan_id=\\d+", "plan_id=N")
+    .replaceAll("(\\w+RDD)\\[\\d+\\]", "$1[N]")
+    .replaceAll("graft_stage-[0-9a-f-]{36}", "graft_stage-<uuid>")
+    .replaceAll("/[0-9a-f]{32}\\b", "/<fingerprint>")
+
   /** Catch plans that would not survive a 100× scale-up: stray
     * cartesian products, shuffles a broadcast should have absorbed,
     * repeated exchanges of the same data. */
@@ -152,7 +164,7 @@ object Dev {
     sb.append(s"Generated by `graft.Dev plans dump` at $sfDir. These are the plans the\n")
     sb.append("SCALING.md claims rest on — regenerate after planner-affecting\nchanges.\n")
     for (name <- headline)
-      sb.append(s"\n## $name\n\n```\n${explain(Registry.byName(name).run(spark, sfDir), FormattedMode)}```\n")
+      sb.append(s"\n## $name\n\n```\n${normalise(explain(Registry.byName(name).run(spark, sfDir), FormattedMode))}```\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
     println(s"[dev] wrote $out")
     spark.stop()

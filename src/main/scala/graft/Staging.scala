@@ -22,16 +22,27 @@ object Staging {
       s"graft_stage-${java.util.UUID.randomUUID()}")
     java.nio.file.Files.createDirectories(p)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      scala.util.Try(rm(p.toFile))
+      scala.util.Try(delete(p.toFile))
       ()
     }))
     p
   }
 
+  private def delete(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(delete))
+    f.delete(); ()
+  }
+
   /** Absolute path of a named scratch area under this JVM's root. */
   def dir(name: String): String = root.resolve(name).toString
+
+  /** [[dir]] emptied: whatever an earlier use left there is deleted, so
+    * the path does not exist until the caller writes it (an append
+    * sink or a streaming checkpoint re-run in the same JVM must start
+    * clean). */
+  def fresh(name: String): String = {
+    val d = dir(name)
+    delete(new java.io.File(d))
+    d
+  }
 }

@@ -409,8 +409,10 @@ object Dedup {
       .distinct()
 
   /** WORK-VOLUME counts of the two blocking strategies for the ngram
-    * screen, as one exact single-row frame — the shingle-space DENSITY
-    * PROBE (VERDICT r19 #5) that turns SCALING.md's r19 prose decision
+    * screen and the strategy they select (`chosen`), as one exact
+    * single-row frame — `dedup_ngram_blocking_probe` over any docs
+    * frame, and the shingle-space DENSITY PROBE (VERDICT r19 #5) that
+    * turns SCALING.md's r19 prose decision
     * boundary into executable code, with the cost model each strategy
     * actually pays:
     *
@@ -442,7 +444,7 @@ object Dedup {
     * NgramBlockingSpec pins BOTH verdicts (the real fixture → grid; a
     * synthetic sparse corpus → prefix) plus pair-set equality of the
     * two full screens. */
-  private[graft] def ngramBlockingCounts(docs: DataFrame): DataFrame = {
+  private[graft] def ngramBlockingProbeOf(docs: DataFrame): DataFrame = {
     // the prefix frame feeds every consumer here — the (doc, ns)
     // signature too, since every ns ≥ 1 doc has a non-empty prefix
     // (length n − ⌈3n/5⌉ + 1 ≥ 1) — so ONE truncated materialization
@@ -477,19 +479,16 @@ object Dedup {
       .select(expr("(c * (c - 1)) div 2").cast("long").as("pairs")) // integer div, see `same`
       .agg(coalesce(sum(col("pairs")), lit(0L)).as("prefix_intermediate"))
     val pfx = prefixCandidatePairs(p).agg(count(lit(1)).as("prefix_candidates"))
+    // `chosen`: the blocking a deployment picks at ingest for this
+    // corpus snapshot, by the total-work model above. Grid wins ties —
+    // it is lossless at any vocabulary and needs no prefix build.
     nDocs
       .crossJoin(broadcast(grid)) // bounded: every side is ONE row
       .crossJoin(broadcast(inter))
       .crossJoin(broadcast(pfx))
-  }
-
-  /** Strategy selector over the probe: the blocking a deployment picks
-    * at ingest for a given corpus snapshot, by the total-work model in
-    * [[ngramBlockingCounts]]'s scaladoc. Grid wins ties — it is
-    * lossless at any vocabulary and needs no prefix build. */
-  private[graft] def chooseNgramBlocking(docs: DataFrame): String = {
-    val r = ngramBlockingCounts(docs).head()
-    if (r.getLong(1) <= r.getLong(2) + r.getLong(3)) "bucket_grid" else "prefix_filter"
+      .withColumn("chosen",
+        when(col("grid_candidates") <= col("prefix_intermediate") + col("prefix_candidates"),
+          "bucket_grid").otherwise("prefix_filter"))
   }
 
   /** The FULL prefix-filter screen — the alternative blocking's
@@ -556,15 +555,7 @@ object Dedup {
         "CASE WHEN gc <= pi + pc THEN 'bucket_grid' ELSE 'prefix_filter' END AS chosen " +
         "FROM grid, pint, pc"
     ),
-    (spark, dir) =>
-      ngramBlockingCounts(ngramScopedDocs(spark, dir))
-        .select(
-          col("n_docs"),
-          col("grid_candidates"),
-          col("prefix_intermediate"),
-          col("prefix_candidates"),
-          when(col("grid_candidates") <= col("prefix_intermediate") + col("prefix_candidates"),
-            "bucket_grid").otherwise("prefix_filter").as("chosen"))
+    (spark, dir) => ngramBlockingProbeOf(ngramScopedDocs(spark, dir))
   )
 
   val dedupNgramJaccard: Q = Q(
@@ -1080,10 +1071,10 @@ object Dedup {
     * cost; the cap bounds any bucket's contribution at scale). */
   /** Per-doc minhash signature table (doc_id, m0..m{nH−1}) for one
     * permutation family, PROBE-SCOPED — the reference build the specs
-    * pin the persisted table and the shiftright derivation against,
-    * and the fallback [[minhashPairs]] takes for a non-contract
-    * permutation family. The contract geometries are served from the
-    * write-once [[minhashSigTablePath]] parquet instead. */
+    * pin the persisted table against, and the fallback [[minhashPairs]]
+    * takes for a non-contract permutation family. The contract
+    * geometries are served from the write-once [[minhashSigTablePath]]
+    * parquet instead. */
   private[graft] def minhashSignatures(
       spark: SparkSession,
       dir: String,
@@ -1108,28 +1099,6 @@ object Dedup {
       .select(col("doc_id"), hs.as("hs"))
       .filter(size(col("hs")) > 0)
       .select(col("doc_id") +: mcols: _*)
-  }
-
-  /** Signature table derived from the SHARED tokenized frame instead of
-    * a fresh corpus scan: the 60-bit hashes in `t` are
-    * conv(substr(md5,1,15)) and the signature hash is
-    * conv(substr(md5,1,8)) % p — the first 8 hex digits are exactly the
-    * top 32 of the 60 bits, so `shiftright(h, 28) % p` reproduces
-    * [[minhashSignatures]]' values bit-for-bit with zero re-hashing
-    * (DedupSpec pins the equality). This is what lets
-    * [[dedupLshRecallReport]] pay ONE tokenization for truth, screens
-    * and exact-verify alike. */
-  private[graft] def minhashSignaturesFromTokens(
-      dtok: DataFrame,
-      permA: Array[Long],
-      permB: Array[Long]
-  ): DataFrame = {
-    val mcols = permA.indices.map { i =>
-      array_min(
-        transform(col("t"), h => ((shiftright(h, 28) % MinhashP) * permA(i) + permB(i)) % MinhashP)
-      ).as(s"m$i")
-    }
-    dtok.filter(size(col("t")) > 0).select(col("doc_id") +: mcols: _*)
   }
 
   /** FULL-CORPUS 16-wide minhash signature build — [[minhashSignatures]]

@@ -540,30 +540,15 @@ object StreamEquivalence {
     * and are cleared before each run: a memo-cleared bench recompute
     * re-runs the leg in the same JVM, and an append sink must start
     * empty or the second run's multiset doubles. */
-  private def runLeg[T](
+  private def runLeg(
       main: SparkSession,
-      ds: org.apache.spark.sql.Dataset[T],
+      ds: Dataset[_],
       tag: String,
       mode: String): DataFrame = {
-    val out  = graft.Staging.dir(s"state_parity/$tag")
-    val ckpt = graft.Staging.dir(s"state_parity/${tag}_ckpt")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    rm(new java.io.File(out))
-    rm(new java.io.File(ckpt))
-    val q = ds.writeStream
-      .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[T], _: Long) =>
-        b.toDF().write.mode("append").parquet(out)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    val schema = ds.toDF().schema
+    val out  = graft.Staging.fresh(s"state_parity/$tag")
+    val ckpt = graft.Staging.fresh(s"state_parity/${tag}_ckpt")
+    graft.streaming.drain(ds, mode, Some(ckpt))(_.write.mode("append").parquet(out))
+    val schema = ds.schema
     if (new java.io.File(out).exists()) main.read.schema(schema).parquet(out)
     else main.createDataFrame(
       main.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

@@ -600,8 +600,9 @@ object StatefulDemos {
     * part-file enumeration plus a derivation tag); a mismatch
     * re-stages. Build dirs are per-call-unique and the final placement
     * is an ATOMIC_MOVE, so two graft JVMs staging the same content
-    * concurrently (the dual-run gate) interleave harmlessly — same
-    * rationale as [[StreamDemos]]' stageCopy. */
+    * concurrently (the dual-run gate) interleave harmlessly — the
+    * rationale of `StreamDemos.stageCopy`, which stages every
+    * whole-table stream (events included). */
   private def stagedChunkStream(
       spark: SparkSession,
       name: String,
@@ -655,8 +656,9 @@ object StatefulDemos {
   private val stageLock = new Object
 
   /** The events table with a stream-ready instant `ts` (naive micros
-    * interpreted as UTC — the [[StreamDemos]] eventsStream rule; a
-    * cast through TIMESTAMP would bake in the session zone). */
+    * interpreted as UTC — the `ts` rule `StreamDemos.eventsStream`
+    * applies to its staged stream; a cast through TIMESTAMP would bake
+    * in the session zone). */
   private def eventsForStream(spark: SparkSession, dir: String): DataFrame = {
     val e = graft.Tables.events(spark, dir)
     val tsCol = e.schema("ts").dataType match {

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming demos (SURVEY §2.7 no-oracle rows): file-source
   * event ingest with watermarked tumbling and session windows. Their
@@ -31,28 +30,7 @@ object StreamDemos {
   private def eventsStream(spark: SparkSession, dir: String, copies: Int = 1): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // The file source needs a DIRECTORY; the testdata table is a single
-    // read-only file, so stage it into a temp dir (per-SF, idempotent).
-    // copies > 1 stages the SAME file N times — each copy is its own
-    // micro-batch (maxFilesPerTrigger=1), simulating an at-least-once
-    // upstream that replays its payload.
-    val staged = java.nio.file.Paths
-      .get(
-        System.getProperty("java.io.tmpdir"),
-        "graft_stream_src",
-        dir.replaceAll("[^a-zA-Z0-9]", "_") + (if (copies > 1) s"_x$copies" else "")
-      )
-    java.nio.file.Files.createDirectories(staged)
-    (1 to copies).foreach { i =>
-      // single-copy path keeps the historical file name so re-runs
-      // against an already-staged dir stay idempotent
-      val target = staged.resolve(if (copies == 1) "events.parquet" else s"events_$i.parquet")
-      stageCopy(java.nio.file.Paths.get(s"$dir/events.parquet"), target)
-    }
-    val raw = spark.readStream
-      .schema(rawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
+    val raw = stagedTableStream(spark, dir, "events", rawSchema, copies)
     rawSchema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -146,7 +124,6 @@ object StreamDemos {
     * aggregation: the unbounded stream never accumulates, only the
     * summary does. */
   def incrementalTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
     val schema = StructType(Seq(
       StructField("event_type", StringType),
@@ -154,22 +131,15 @@ object StreamDemos {
       StructField("value", DoubleType)
     ))
     var sketch: Array[Row] = Array.empty
-    val q = eventsStream(spark, dir)
-      .select(col("event_type"), col("event_id"), col("value"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val prev = spark.createDataFrame(
-          java.util.Arrays.asList(sketch: _*), schema)
-        val merged = org.apache.spark.sql.graftx.TopKPerGroup(
-          batch.select(col("event_type"), col("event_id"), col("value")).unionByName(prev),
-          Seq("event_type"), Seq("value" -> true, "event_id" -> false), k)
-          .select(col("event_type"), col("event_id"), col("value"))
-        sketch = merged.collect() // bounded: k rows per event_type
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(eventsStream(spark, dir).select(col("event_type"), col("event_id"), col("value"))) { batch =>
+      val prev = spark.createDataFrame(
+        java.util.Arrays.asList(sketch: _*), schema)
+      val merged = org.apache.spark.sql.graftx.TopKPerGroup(
+        batch.select(col("event_type"), col("event_id"), col("value")).unionByName(prev),
+        Seq("event_type"), Seq("value" -> true, "event_id" -> false), k)
+        .select(col("event_type"), col("event_id"), col("value"))
+      sketch = merged.collect() // bounded: k rows per event_type
+    }
     spark.createDataFrame(java.util.Arrays.asList(sketch: _*), schema)
   }
 
@@ -180,10 +150,14 @@ object StreamDemos {
   private def docsStream(spark: SparkSession, dir: String, copies: Int = 1): DataFrame =
     stagedTableStream(spark, dir, "documents", Tables.documents(spark, dir).schema, copies)
 
-  /** Shared staging core for the per-table file-source streams: copy
-    * `<dir>/<table>.parquet` into a fixed stream dir `copies` times
-    * (one file per trigger — copies > 1 is an at-least-once upstream)
-    * and open a schema-pinned file stream over it. */
+  /** Shared staging core for the per-table file-source streams: the
+    * file source needs a DIRECTORY and each testdata table is a single
+    * read-only file, so copy `<dir>/<table>.parquet` into a fixed
+    * per-SF stream dir `copies` times (one file per trigger — copies
+    * > 1 replays the same payload, an at-least-once upstream) and open
+    * a schema-pinned file stream over it. The single-copy path keeps
+    * the table's own file name so re-runs against an already-staged
+    * dir stay idempotent. */
   private def stagedTableStream(
       spark: SparkSession,
       dir: String,
@@ -313,9 +287,6 @@ object StreamDemos {
       .orderBy(col("word"))
   }
 
-  /** Drive a streaming DF to completion against a finite file source:
-    * write every micro-batch to an in-memory table, process all
-    * available input, stop. Returns the memory sink's final contents. */
   /** Streaming near-dup ingest screen — the stream side of the
     * persisted-signature serving story: each micro-batch of incoming
     * documents is signature-transformed (stateless projection) and
@@ -337,38 +308,19 @@ object StreamDemos {
       dir: String,
       copies: Int = 2,
       scope: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.Row
     // frozen corpus side persisted once per run; micro-batch probes
     // broadcast — the corpus signatures are never re-read or shuffled
     // per trigger (r17, same shape as the minhash screen)
     val corpus = graft.operators.Dedup.corpusSigTable(spark, dir).persist()
-    val verdicts = scala.collection.concurrent.TrieMap.empty[Long, Row]
     try {
       corpus.count() // materialize before the stream starts
-      val q = docsStream(spark, dir, copies)
-        .filter(col("doc_id") % 10 === 0)
-        .filter(scope)
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Dedup
-            .screenSigsAgainst(
-              graft.operators.Dedup.signaturesOf(batch), corpus, broadcastProbe = true)
-            .collect() // bounded: <= |demo batch| verdict rows per micro-batch
-            .foreach(r => verdicts.put(r.getLong(0), r))
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      mergedByKey(
+        docsStream(spark, dir, copies).filter(col("doc_id") % 10 === 0).filter(scope),
+        Tables.documents(spark, dir)) { batch =>
+        graft.operators.Dedup.screenSigsAgainst(
+          graft.operators.Dedup.signaturesOf(batch), corpus, broadcastProbe = true)
+      }(_.getLong(0))
     } finally corpus.unpersist()
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      verdicts.values.toSeq.sortBy(_.getLong(0)).asJava,
-      graft.operators.Dedup.screenSigsAgainst(
-        graft.operators.Dedup.signaturesOf(Tables.documents(spark, dir).limit(0)),
-        corpus.limit(0)).schema
-    )
   }
 
   /** Streaming maintenance of the BM25 inverted index — the serving
@@ -399,22 +351,16 @@ object StreamDemos {
       scope: Column = lit(true)): (DataFrame, DataFrame) = {
     val postings = scala.collection.concurrent.TrieMap.empty[(String, Long), (Int, Long)]
     val docDl    = scala.collection.concurrent.TrieMap.empty[Long, Int]
-    val q = docsStream(spark, dir, copies).filter(scope).writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.TextAnalysis
-          .bm25PostingsOf(batch)
-          .collect() // bounded by the demo batch's postings, never the corpus
-          .foreach(r => postings.put((r.getString(0), r.getLong(1)), (r.getInt(2), r.getLong(3))))
-        graft.operators.TextAnalysis
-          .bm25DocLenOf(batch)
-          .collect()
-          .foreach(r => docDl.put(r.getLong(0), r.getInt(1)))
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, copies).filter(scope)) { batch =>
+      graft.operators.TextAnalysis
+        .bm25PostingsOf(batch)
+        .collect() // bounded by the demo batch's postings, never the corpus
+        .foreach(r => postings.put((r.getString(0), r.getLong(1)), (r.getInt(2), r.getLong(3))))
+      graft.operators.TextAnalysis
+        .bm25DocLenOf(batch)
+        .collect()
+        .foreach(r => docDl.put(r.getLong(0), r.getInt(1)))
+    }
     import spark.implicits._
     val postingsDf = postings.toSeq
       .map { case ((tok, doc), (dl, tf)) => (tok, doc, dl, tf) }
@@ -447,28 +393,9 @@ object StreamDemos {
     * [[graft.operators.Similarity.lshSigTablePath]] batch build. */
   def streamedLshSigTable(
       spark: SparkSession, dir: String, copies: Int = 2,
-      scope: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.Row
-    val sigs = scala.collection.concurrent.TrieMap.empty[Long, Row]
-    val q = embStream(spark, dir, copies).filter(scope).writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Similarity
-          .lshSignaturesOf(batch)
-          .collect() // bounded by the demo batch, never the corpus
-          .foreach(r => sigs.put(r.getLong(0), r))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      sigs.values.toSeq.sortBy(_.getLong(0)).asJava,
-      graft.operators.Similarity
-        .lshSignaturesOf(Tables.embeddings(spark, dir).limit(0)).schema
-    )
-  }
+      scope: Column = lit(true)): DataFrame =
+    mergedByKey(embStream(spark, dir, copies).filter(scope), Tables.embeddings(spark, dir))(
+      graft.operators.Similarity.lshSignaturesOf)(_.getLong(0))
 
   /** Streaming MinHash ingest screen — the banded sibling of
     * [[screenedIngest]]: each micro-batch of incoming documents is
@@ -492,7 +419,6 @@ object StreamDemos {
       dir: String,
       copies: Int = 2,
       scope: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.Row
     val corpus = spark.read
       .parquet(graft.operators.Dedup.minhashSigTablePath(spark, dir))
       .filter(col("doc_id") % 10 =!= 0)
@@ -508,35 +434,16 @@ object StreamDemos {
     val corpusOk = corpusB
       .join(graft.operators.Dedup.minhashBucketCapOk(corpusB), Seq("band", "bk"))
       .persist()
-    val verdicts = scala.collection.concurrent.TrieMap.empty[Long, Row]
     try {
       corpusOk.count() // materialize before the stream starts
-      val q = docsStream(spark, dir, copies)
-        .filter(col("doc_id") % 10 === 0)
-        .filter(scope)
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Dedup
-            // broadcastProbe: the micro-batch's bands broadcast; the
-            // persisted corpus index is never shuffled per trigger
-            .minhashScreenPrepared(batch, corpusOk, broadcastProbe = true)
-            .collect() // bounded: <= |demo batch| verdict rows per micro-batch
-            .foreach(r => verdicts.put(r.getLong(0), r))
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    } finally {
-      corpusOk.unpersist()
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      verdicts.values.toSeq.sortBy(_.getLong(0)).asJava,
-      graft.operators.Dedup
-        .minhashScreenAgainst(Tables.documents(spark, dir).limit(0), corpus.limit(0)).schema
-    )
+      mergedByKey(
+        docsStream(spark, dir, copies).filter(col("doc_id") % 10 === 0).filter(scope),
+        Tables.documents(spark, dir)) { batch =>
+        // broadcastProbe: the micro-batch's bands broadcast; the
+        // persisted corpus index is never shuffled per trigger
+        graft.operators.Dedup.minhashScreenPrepared(batch, corpusOk, broadcastProbe = true)
+      }(_.getLong(0))
+    } finally corpusOk.unpersist()
   }
 
   /** Streaming pair-manifest delta maintenance — the stream side of
@@ -569,7 +476,6 @@ object StreamDemos {
       dir: String,
       copies: Int = 2,
       scope: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.Row
     import scala.jdk.CollectionConverters._
     // the corpus signature side is frozen for the whole ingest run —
     // persist it once instead of re-reading + re-decoding the view
@@ -582,27 +488,18 @@ object StreamDemos {
     val pairs   = scala.collection.concurrent.TrieMap.empty[(Long, Long), Row]
     try {
       corpus.count() // materialize before the stream starts
-      val q = docsStream(spark, dir, copies)
-        .filter(col("doc_id") % 10 === 0)
-        .filter(scope)
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // sign once per arrival, reuse for probe AND pool accumulation
-          val sigs = graft.operators.Dedup.signaturesOf(batch).collect() // bounded by the micro-batch
-          sigs.foreach(r => arrived.put(r.getLong(0), r))
-          val probe = spark.createDataFrame(sigs.toSeq.asJava, sigSchema)
-          val pool = corpus.unionByName(
-            spark.createDataFrame(arrived.values.toSeq.asJava, sigSchema))
-          graft.operators.Dedup
-            .pairDeltaAgainst(probe, pool, col("ida") =!= col("idb"))
-            .collect() // bounded: the micro-batch's delta pairs
-            .foreach(r => pairs.put((r.getLong(0), r.getLong(1)), r))
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      drain(docsStream(spark, dir, copies).filter(col("doc_id") % 10 === 0).filter(scope)) { batch =>
+        // sign once per arrival, reuse for probe AND pool accumulation
+        val sigs = graft.operators.Dedup.signaturesOf(batch).collect() // bounded by the micro-batch
+        sigs.foreach(r => arrived.put(r.getLong(0), r))
+        val probe = spark.createDataFrame(sigs.toSeq.asJava, sigSchema)
+        val pool = corpus.unionByName(
+          spark.createDataFrame(arrived.values.toSeq.asJava, sigSchema))
+        graft.operators.Dedup
+          .pairDeltaAgainst(probe, pool, col("ida") =!= col("idb"))
+          .collect() // bounded: the micro-batch's delta pairs
+          .foreach(r => pairs.put((r.getLong(0), r.getLong(1)), r))
+      }
     } finally corpus.unpersist()
     spark.createDataFrame(
       pairs.values.toSeq.sortBy(r => (r.getLong(0), r.getLong(1))).asJava,
@@ -615,43 +512,30 @@ object StreamDemos {
     )
   }
 
-  /** Generic micro-batch maintenance twin for any PER-DOCUMENT-pure
-    * serving view over the documents table: each micro-batch runs the
-    * view build's OWN stateless projection and merges rows
-    * idempotently by doc_id (column 0), so at-least-once replay
-    * (copies ≥ 2) reproduces the batch-built parquet bit-for-bit —
-    * the [[streamedBm25Index]]/[[streamedLshSigTable]] pattern,
-    * factored once now that FOUR more signature/shingle tables share
-    * it. The driver map stands in for a keyed MERGE-target table
-    * (bounded by the demo corpus); at 100 TB each batch MERGEs its
-    * projection partial BY doc_id — batch-sized work, corpus text
-    * read exactly once per document. Views that are NOT per-document
-    * pure cannot ride this helper: the pair manifest's stream story is
-    * the DELTA screen ([[pairDeltaIngest]] — new pairs, not re-merged
-    * rows), and the co-purchase edge view's refresh story remains a
-    * snapshot rebuild. */
-  private def streamedDocView(
-      spark: SparkSession,
-      dir: String,
-      copies: Int,
-      scope: Column = lit(true))(proj: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    val rows = scala.collection.concurrent.TrieMap.empty[Long, Row]
-    val q = docsStream(spark, dir, copies).filter(scope).writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        proj(batch)
-          .collect() // bounded by the demo batch's projection, never the corpus
-          .foreach(r => rows.put(r.getLong(0), r))
-        ()
-      }
-      .start()
-    q.awaitTermination()
+  /** The keyed merge of the replay-idempotent twins: drain `stream`,
+    * run `proj` (the view build's OWN stateless projection, or a
+    * screen against a frozen side) on each micro-batch and merge its
+    * rows by `key`. `proj` is a pure function of each keyed unit, so a
+    * replayed record (copies ≥ 2) recomputes the identical row and
+    * at-least-once delivery reproduces the batch build bit-for-bit.
+    * Returns the merged rows sorted by `key`, with the schema `proj`
+    * gives over `like` (the static table the stream replays). The
+    * driver map stands in for a keyed MERGE-target table (bounded by
+    * the demo corpus); at 100 TB each batch MERGEs its projection
+    * partial BY key. Views that are not pure per keyed unit keep their
+    * own cross-batch state: [[pairDeltaIngest]], [[streamedEdgeView]]
+    * and [[streamedBm25Index]]. */
+  private def mergedByKey[K: Ordering](stream: DataFrame, like: DataFrame)(
+      proj: DataFrame => DataFrame)(key: Row => K): DataFrame = {
+    val rows = scala.collection.concurrent.TrieMap.empty[K, Row]
+    drain(stream) { batch =>
+      proj(batch)
+        .collect() // bounded by the demo batch's projection, never the corpus
+        .foreach(r => rows.put(key(r), r))
+    }
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.values.toSeq.sortBy(_.getLong(0)).asJava,
-      proj(Tables.documents(spark, dir).limit(0)).schema)
+    stream.sparkSession.createDataFrame(
+      rows.values.toSeq.sortBy(key).asJava, proj(like.limit(0)).schema)
   }
 
   /** Streaming maintenance of the FULL-CORPUS 16-wide minhash
@@ -661,7 +545,8 @@ object StreamDemos {
   def streamedMinhashSigTable(
       spark: SparkSession, dir: String, copies: Int = 2,
       scope: Column = lit(true)): DataFrame =
-    streamedDocView(spark, dir, copies, scope)(graft.operators.Dedup.minhashSignaturesOf)
+    mergedByKey(docsStream(spark, dir, copies).filter(scope), Tables.documents(spark, dir))(
+      graft.operators.Dedup.minhashSignaturesOf)(_.getLong(0))
 
   /** Streaming maintenance of the exact-Jaccard token-signature table
     * — [[graft.operators.Dedup.signaturesOf]] per batch, merged by
@@ -669,7 +554,8 @@ object StreamDemos {
   def streamedExactSigTable(
       spark: SparkSession, dir: String, copies: Int = 2,
       scope: Column = lit(true)): DataFrame =
-    streamedDocView(spark, dir, copies, scope)(graft.operators.Dedup.signaturesOf)
+    mergedByKey(docsStream(spark, dir, copies).filter(scope), Tables.documents(spark, dir))(
+      graft.operators.Dedup.signaturesOf)(_.getLong(0))
 
   /** Streaming maintenance of the simhash signature table —
     * [[graft.operators.Dedup.simhashOf]] per batch (a per-document
@@ -679,7 +565,8 @@ object StreamDemos {
   def streamedSimhashSigTable(
       spark: SparkSession, dir: String, copies: Int = 2,
       scope: Column = lit(true)): DataFrame =
-    streamedDocView(spark, dir, copies, scope)(graft.operators.Dedup.simhashOf)
+    mergedByKey(docsStream(spark, dir, copies).filter(scope), Tables.documents(spark, dir))(
+      graft.operators.Dedup.simhashOf)(_.getLong(0))
 
   /** Streaming maintenance of the rolling-hash 5-gram shingle-set
     * table — [[graft.operators.TextAnalysis.contamShinglesBuild]] per
@@ -690,7 +577,8 @@ object StreamDemos {
   def streamedContamShingleTable(
       spark: SparkSession, dir: String, copies: Int = 2,
       scope: Column = lit(true)): DataFrame =
-    streamedDocView(spark, dir, copies, scope)(graft.operators.TextAnalysis.contamShinglesBuild)
+    mergedByKey(docsStream(spark, dir, copies).filter(scope), Tables.documents(spark, dir))(
+      graft.operators.TextAnalysis.contamShinglesBuild)(_.getLong(0))
 
   /** Streaming maintenance of the multimodal FEATURE view — the mm
     * family's stream-update story (17th parity family, r15): each
@@ -706,7 +594,8 @@ object StreamDemos {
   def streamedMmFeatureTable(
       spark: SparkSession, dir: String, copies: Int = 2,
       scope: Column = lit(true)): DataFrame =
-    streamedDocView(spark, dir, copies, scope)(graft.operators.Multimodal.mmFeatureRowsOf)
+    mergedByKey(docsStream(spark, dir, copies).filter(scope), Tables.documents(spark, dir))(
+      graft.operators.Multimodal.mmFeatureRowsOf)(_.getLong(0))
 
   /** Streaming maintenance of the CDC chunk table —
     * [[graft.operators.Dedup.cdcChunks]] per batch, merged by
@@ -721,27 +610,9 @@ object StreamDemos {
       spark: SparkSession,
       dir: String,
       copies: Int = 2,
-      scope: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.Row
-    val rows = scala.collection.concurrent.TrieMap.empty[(Long, Long), Row]
-    val q = docsStream(spark, dir, copies).filter(scope).writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.cdcChunks(batch)
-          .collect() // per-batch collect is batch-sized; the merge map
-          // accumulates the corpus chunk table for the twin's duration
-          // (demo-scale-bounded, like the other foreachBatch twins)
-          .foreach(r => rows.put((r.getLong(0), r.getLong(1)), r))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.values.toSeq.sortBy(r => (r.getLong(0), r.getLong(1))).asJava,
-      graft.operators.Dedup.cdcChunks(Tables.documents(spark, dir).limit(0)).schema)
-  }
+      scope: Column = lit(true)): DataFrame =
+    mergedByKey(docsStream(spark, dir, copies).filter(scope), Tables.documents(spark, dir))(
+      graft.operators.Dedup.cdcChunks)(r => (r.getLong(0), r.getLong(1)))
 
   /** Streaming maintenance of the co-purchase EDGE view — the last
     * view family without a stream story, and the one whose rows are
@@ -779,39 +650,31 @@ object StreamDemos {
     import scala.jdk.CollectionConverters._
     val baskets  = scala.collection.concurrent.TrieMap.empty[Long, Set[Long]]
     val contribs = scala.collection.concurrent.TrieMap.empty[Long, Array[(Long, Long)]]
-    val q = stagedTableStream(spark, dir, "lineitem", Tables.lineitem(spark, dir).schema, copies)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .filter(scope)
-      .writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val touched = batch
-          .distinct()
-          .collect() // bounded by the micro-batch's distinct incidence
-          .groupBy(_.getLong(0))
-          .map { case (okey, rs) =>
-            val merged = baskets.getOrElse(okey, Set.empty[Long]) ++ rs.map(_.getLong(1))
-            baskets.put(okey, merged)
-            okey
-          }
-        import spark.implicits._
-        val touchedIncidence = touched.toSeq
-          .flatMap(okey => baskets(okey).toSeq.map(p => (okey, p)))
-          .toDF("l_orderkey", "l_partkey")
-        val pairsByOrder = graft.operators.Graph
-          .basketPairs(touchedIncidence)
-          .collect() // bounded: C(MaxBasketParts,2) per touched order
-          .groupBy(_.getLong(0))
-        touched.foreach { okey =>
-          contribs.put(
-            okey,
-            pairsByOrder.getOrElse(okey, Array.empty).map(r => (r.getLong(1), r.getLong(2))))
+    val lineitem = stagedTableStream(spark, dir, "lineitem", Tables.lineitem(spark, dir).schema, copies)
+    drain(lineitem.select(col("l_orderkey"), col("l_partkey")).filter(scope)) { batch =>
+      val touched = batch
+        .distinct()
+        .collect() // bounded by the micro-batch's distinct incidence
+        .groupBy(_.getLong(0))
+        .map { case (okey, rs) =>
+          val merged = baskets.getOrElse(okey, Set.empty[Long]) ++ rs.map(_.getLong(1))
+          baskets.put(okey, merged)
+          okey
         }
-        ()
+      import spark.implicits._
+      val touchedIncidence = touched.toSeq
+        .flatMap(okey => baskets(okey).toSeq.map(p => (okey, p)))
+        .toDF("l_orderkey", "l_partkey")
+      val pairsByOrder = graft.operators.Graph
+        .basketPairs(touchedIncidence)
+        .collect() // bounded: C(MaxBasketParts,2) per touched order
+        .groupBy(_.getLong(0))
+      touched.foreach { okey =>
+        contribs.put(
+          okey,
+          pairsByOrder.getOrElse(okey, Array.empty).map(r => (r.getLong(1), r.getLong(2))))
       }
-      .start()
-    q.awaitTermination()
+    }
     import spark.implicits._
     contribs.values.toSeq.flatten
       .groupBy(identity)
@@ -840,37 +703,20 @@ object StreamDemos {
   def contamScreenedIngest(
       spark: SparkSession, dir: String, copies: Int = 2,
       scope: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.Row
     // the frozen bench side is re-read + re-exploded per micro-batch
     // otherwise — tiny, but persisting it once removes two parquet
     // scans + explodes per trigger (r17)
     val bench = graft.operators.TextAnalysis.contamBenchFrame(spark, dir).persist()
-    val verdicts = scala.collection.concurrent.TrieMap.empty[(Long, Long), Row]
     try {
       bench.count() // materialize before the stream starts
-      val q = docsStream(spark, dir, copies)
-        .filter(col("doc_id") >= 20)
-        .filter(scope)
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.TextAnalysis
-            .contamScreenAgainst(graft.operators.TextAnalysis.contamShinglesBuild(batch), bench)
-            .collect() // bounded: <= |batch| x |bench| verdict rows per micro-batch
-            .foreach(r => verdicts.put((r.getLong(0), r.getLong(1)), r))
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      mergedByKey(
+        docsStream(spark, dir, copies).filter(col("doc_id") >= 20).filter(scope),
+        Tables.documents(spark, dir)) { batch =>
+        // <= |batch| x |bench| verdict rows per micro-batch
+        graft.operators.TextAnalysis
+          .contamScreenAgainst(graft.operators.TextAnalysis.contamShinglesBuild(batch), bench)
+      }(r => (r.getLong(0), r.getLong(1)))
     } finally bench.unpersist()
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      verdicts.values.toSeq.sortBy(r => (r.getLong(0), r.getLong(1))).asJava,
-      graft.operators.TextAnalysis.contamScreenAgainst(
-        graft.operators.TextAnalysis.contamShinglesBuild(Tables.documents(spark, dir).limit(0)),
-        bench.limit(0)).schema
-    )
   }
 
   /** Streaming maintenance of the IVF inverted lists — the third and
@@ -889,28 +735,9 @@ object StreamDemos {
   def streamedIvfAssignments(
       spark: SparkSession, dir: String, copies: Int = 2,
       scope: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.Row
-    val (centPath, _) = graft.operators.Advanced.ivfIndexPath(spark, dir)
-    val cent = spark.read.parquet(centPath)
-    val asg = scala.collection.concurrent.TrieMap.empty[Long, Row]
-    val q = embStream(spark, dir, copies).filter(scope).writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Advanced
-          .ivfAssignmentsOf(batch, cent)
-          .collect() // bounded by the demo batch, never the corpus
-          .foreach(r => asg.put(r.getLong(0), r))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      asg.values.toSeq.sortBy(_.getLong(0)).asJava,
-      graft.operators.Advanced
-        .ivfAssignmentsOf(Tables.embeddings(spark, dir).limit(0), cent.limit(0)).schema
-    )
+    val cent = spark.read.parquet(graft.operators.Advanced.ivfIndexPath(spark, dir)._1)
+    mergedByKey(embStream(spark, dir, copies).filter(scope), Tables.embeddings(spark, dir))(
+      graft.operators.Advanced.ivfAssignmentsOf(_, cent))(_.getLong(0))
   }
 
   /** Streaming maintenance of the PQ codes table — new vectors are
@@ -932,28 +759,9 @@ object StreamDemos {
       dir: String,
       copies: Int = 2,
       scope: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.Row
-    val (cbPath, _) = graft.operators.Advanced.pqIndexPath(spark, dir)
-    val cb    = spark.read.parquet(cbPath)
-    val codes = scala.collection.concurrent.TrieMap.empty[Long, Row]
-    val q = embStream(spark, dir, copies).filter(scope).writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Advanced
-          .pqCodesOf(batch, cb)
-          .collect() // bounded by the demo batch, never the corpus
-          .foreach(r => codes.put(r.getLong(0), r))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      codes.values.toSeq.sortBy(_.getLong(0)).asJava,
-      graft.operators.Advanced
-        .pqCodesOf(Tables.embeddings(spark, dir).limit(0), cb.limit(0)).schema
-    )
+    val cb = spark.read.parquet(graft.operators.Advanced.pqIndexPath(spark, dir)._1)
+    mergedByKey(embStream(spark, dir, copies).filter(scope), Tables.embeddings(spark, dir))(
+      graft.operators.Advanced.pqCodesOf(_, cb))(_.getLong(0))
   }
 
   /** Streaming maintenance of the IVF-PQ codes table — each micro-batch
@@ -972,32 +780,11 @@ object StreamDemos {
       dir: String,
       copies: Int = 2,
       scope: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.Row
-    val (cbPath, _) = graft.operators.Advanced.ivfPqIndexPath(spark, dir)
-    val cb    = spark.read.parquet(cbPath)
-    val cent  = spark.read.parquet(graft.operators.Advanced.ivfIndexPath(spark, dir)._1)
-    val codes = scala.collection.concurrent.TrieMap.empty[Long, Row]
-    val q = embStream(spark, dir, copies).filter(scope).writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Advanced
-          .ivfPqCodesOf(graft.operators.Advanced.residualsOf(batch, cent), cb)
-          .collect() // bounded by the demo batch, never the corpus
-          .foreach(r => codes.put(r.getLong(0), r))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      codes.values.toSeq.sortBy(_.getLong(0)).asJava,
-      graft.operators.Advanced
-        .ivfPqCodesOf(
-          graft.operators.Advanced.residualsOf(
-            Tables.embeddings(spark, dir).limit(0), cent.limit(0)),
-          cb.limit(0)).schema
-    )
+    val cb   = spark.read.parquet(graft.operators.Advanced.ivfPqIndexPath(spark, dir)._1)
+    val cent = spark.read.parquet(graft.operators.Advanced.ivfIndexPath(spark, dir)._1)
+    mergedByKey(embStream(spark, dir, copies).filter(scope), Tables.embeddings(spark, dir)) { batch =>
+      graft.operators.Advanced.ivfPqCodesOf(graft.operators.Advanced.residualsOf(batch, cent), cb)
+    }(_.getLong(0))
   }
 
   /** Streaming maintenance of the BPE vocab view — the first twin
@@ -1029,38 +816,25 @@ object StreamDemos {
       dir: String,
       copies: Int = 2,
       scope: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.Row
     val (mergesPath, _) = graft.operators.TextAnalysis.bpeIndexPath(spark, dir)
     val merges = graft.operators.TextAnalysis.bpeMergeList(spark, mergesPath)
-    val counts = scala.collection.concurrent.TrieMap.empty[(Long, String), Row]
-    val q = docsStream(spark, dir, copies).filter(scope).writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.TextAnalysis
-          .bpeDocTokenCounts(batch)
-          .collect() // bounded by the demo batch, never the corpus
-          .foreach(r => counts.put((r.getLong(0), r.getString(1)), r))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    val mergedCounts = spark.createDataFrame(
-      counts.values.toSeq.sortBy(r => (r.getLong(0), r.getString(1))).asJava,
-      graft.operators.TextAnalysis
-        .bpeDocTokenCounts(Tables.documents(spark, dir).limit(0)).schema)
+    val mergedCounts =
+      mergedByKey(docsStream(spark, dir, copies).filter(scope), Tables.documents(spark, dir))(
+        graft.operators.TextAnalysis.bpeDocTokenCounts)(r => (r.getLong(0), r.getString(1)))
     graft.operators.TextAnalysis.bpeVocabOf(mergedCounts, merges)
   }
 
+  /** Drive a streaming DF to completion against a finite file source:
+    * write every micro-batch to an in-memory table, process all
+    * available input, stop. Returns the memory sink's final contents. */
   def runToCompletion(spark: SparkSession, streamed: DataFrame, name: String): DataFrame = {
-    val q: StreamingQuery = streamed.writeStream
+    streamed.writeStream
       .format("memory")
       .queryName(name)
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     spark.table(name)
   }
 

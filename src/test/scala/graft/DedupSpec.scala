@@ -284,17 +284,6 @@ class DedupSpec extends SparkSuite {
       "every cluster's keeper is its min id — the quality argmax is vacuous here")
   }
 
-  test("shiftright-derived signatures equal the fresh-scan signature build bit-for-bit") {
-    val dtok = operators.Dedup.tokenizedDocs(spark, sf, col("doc_id") < 500)
-    val derived = operators.Dedup
-      .minhashSignaturesFromTokens(dtok, operators.Dedup.MinhashA16, operators.Dedup.MinhashB16)
-    val fresh = operators.Dedup
-      .minhashSignatures(spark, sf, operators.Dedup.MinhashA16, operators.Dedup.MinhashB16)
-      .filter(col("doc_id") < 500)
-    assert(derived.exceptAll(fresh).isEmpty && fresh.exceptAll(derived).isEmpty,
-      "the top-32-bit derivation must reproduce the md5-prefix hash exactly")
-  }
-
   test("persisted minhash table equals the fresh build and isolates per input dir") {
     // (a) the ViewStore-served FULL-CORPUS 16-wide table, restricted to
     // the probe scope, must be row-for-row the fresh probe-scoped build

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The ngram screen's blocking DECISION BOUNDARY, executable (VERDICT
-  * r19 #5): `Dedup.chooseNgramBlocking` costs out the bucket-grid vs
+  * r19 #5): `Dedup.ngramBlockingProbeOf` costs out the bucket-grid vs
   * PPJoin-style prefix-filter strategies from the corpus itself
   * (grid's generate-and-verify volume vs the prefix join's
   * intermediate + distinct candidates) and both full screens must
@@ -26,11 +26,11 @@ class NgramBlockingSpec extends SparkSuite {
 
   test("the real fixture's density probe selects the bucket grid") {
     val docs = Tables.documents(spark, sf).filter(col("doc_id") < 2000)
-    assert(operators.Dedup.chooseNgramBlocking(docs) == "bucket_grid")
+    val r = operators.Dedup.ngramBlockingProbeOf(docs).head()
+    assert(r.getAs[String]("chosen") == "bucket_grid")
     // and the decision's inputs are sane: banded prefix candidates are
     // a SUBSET of the band pairs, so the distinct count alone can never
     // pick grid — only the intermediate term can (the r19 correction)
-    val r = operators.Dedup.ngramBlockingCounts(docs).head()
     val (grid, inter, pfx) = (r.getLong(1), r.getLong(2), r.getLong(3))
     assert(pfx <= grid, s"prefix candidates $pfx must be a subset of the $grid band pairs")
     assert(grid <= inter + pfx, s"grid $grid should win on total volume vs $inter + $pfx")
@@ -58,8 +58,8 @@ class NgramBlockingSpec extends SparkSuite {
 
   test("a sparse corpus flips the selector to the prefix filter") {
     val docs = sparseCorpus
-    assert(operators.Dedup.chooseNgramBlocking(docs) == "prefix_filter")
-    val r = operators.Dedup.ngramBlockingCounts(docs).head()
+    val r = operators.Dedup.ngramBlockingProbeOf(docs).head()
+    assert(r.getAs[String]("chosen") == "prefix_filter")
     val (grid, inter, pfx) = (r.getLong(1), r.getLong(2), r.getLong(3))
     // all 40 docs share one (lang, count) block: grid must verify every
     // pair; the prefix join only ever materializes the planted dups

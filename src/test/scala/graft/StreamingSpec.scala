@@ -536,4 +536,32 @@ class StreamingSpec extends SparkSuite {
     assert(streamed.nonEmpty, "stream must build assignments")
     assert(streamed.toSeq == batch.toSeq, "streamed IVF assignments diverge from the batch lists")
   }
+
+  test("a source table regenerated in place is re-staged, never served stale") {
+    // the file-source streams replay a STAGED copy of each table, and
+    // the staging dir outlives the run; a table rewritten under the
+    // same path (new size and mtime) must reach the next replay
+    import java.nio.file.StandardCopyOption
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_restage")
+    try {
+      val table = dir.resolve("documents.parquet")
+      Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"), table)
+      def streamedKeys(): Set[Long] =
+        streaming.StreamDemos.streamedExactSigTable(spark, dir.toString, copies = 1)
+          .collect().map(_.getLong(0)).toSet
+      val docs = Tables.documents(spark, sf)
+      val all = docs.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+      assert(streamedKeys() == all)
+      val subset = docs.filter(col("doc_id") % 2 === 0)
+      val subsetKeys = subset.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+      assert(subsetKeys.nonEmpty && subsetKeys.size < all.size, "subset must be strict and non-empty")
+      val written = dir.resolve("subset")
+      subset.coalesce(1).write.parquet(written.toString)
+      val part = Files.list(written).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, table, StandardCopyOption.REPLACE_EXISTING)
+      assert(streamedKeys() == subsetKeys, "the replay served the stale staged copy")
+    } finally Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+  }
 }
