@@ -41,6 +41,11 @@ object Sessions {
       // because per-pool fair sharing is the correct shape when audits
       // share an app with other tenants, and it costs nothing.
       .config("spark.scheduler.mode", "FAIR")
+      // No per-session artifact classloader: nothing here adds jars or
+      // classes to a session, and with isolation on every newSession()
+      // gets its own executor-side loader and so its own codegen cache
+      // (Spark keys compiled classes by loader and source).
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

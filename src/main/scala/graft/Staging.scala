@@ -28,7 +28,8 @@ object Staging {
     p
   }
 
-  private def delete(f: java.io.File): Unit = {
+  /** Recursive, best-effort delete of `f` (absent is fine). */
+  private[graft] def delete(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(delete))
     f.delete(); ()
   }

@@ -598,62 +598,74 @@ object StatefulDemos {
     * strictly increasing mtime (and a matching lexical name, so any
     * tie-break agrees). Staleness is judged on `sig` (the SOURCE's
     * part-file enumeration plus a derivation tag); a mismatch
-    * re-stages. Build dirs are per-call-unique and the final placement
-    * is an ATOMIC_MOVE, so two graft JVMs staging the same content
-    * concurrently (the dual-run gate) interleave harmlessly — the
-    * rationale of `StreamDemos.stageCopy`, which stages every
-    * whole-table stream (events included). */
+    * re-stages. Build dirs are per-call-unique, removed even when a
+    * chunk write throws, and the final placement is an ATOMIC_MOVE, so
+    * two graft JVMs staging the same content concurrently (the
+    * dual-run gate) interleave harmlessly — the rationale of
+    * `StreamDemos.stageCopy`, which stages every whole-table stream
+    * (events included).
+    *
+    * Within a JVM, calls for the same `name` serialize on that name's
+    * lock while different sources stage concurrently (the parity
+    * audit's legs open the events, orders and replay sources at once).
+    * The staged schema is read once per (staged dir, `sig`): a later
+    * call on a fresh staging starts no Spark job. */
   private def stagedChunkStream(
       spark: SparkSession,
       name: String,
       sig: String,
-      chunks: Seq[() => DataFrame]): DataFrame = stageLock.synchronized {
+      chunks: Seq[() => DataFrame]): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import java.nio.charset.StandardCharsets.UTF_8
     import scala.jdk.CollectionConverters._
     val staged = Paths.get(
       System.getProperty("java.io.tmpdir"), "graft_stream_chunks", name)
-    Files.createDirectories(staged)
-    val meta = staged.resolve("_staging_meta")
-    val fresh = Files.exists(meta) &&
-      new String(Files.readAllBytes(meta), UTF_8) == sig
-    if (!fresh) {
-      val base = System.currentTimeMillis()
-      chunks.zipWithIndex.foreach { case (c, i) =>
-        val build = staged.resolve(s"_build-${java.util.UUID.randomUUID()}")
-        c().coalesce(1).write.mode("overwrite").parquet(build.toString)
-        val bl = Files.list(build)
-        val part =
-          try bl.iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file staged under $build"))
-          finally bl.close()
-        val target = staged.resolve(f"chunk_$i%02d.parquet")
-        Files.move(part, target,
+    val schema = stageLocks.getOrElseUpdate(name, new Object).synchronized {
+      Files.createDirectories(staged)
+      val meta = staged.resolve("_staging_meta")
+      val fresh = Files.exists(meta) &&
+        new String(Files.readAllBytes(meta), UTF_8) == sig
+      if (!fresh) {
+        val base = System.currentTimeMillis()
+        chunks.zipWithIndex.foreach { case (c, i) =>
+          val build = staged.resolve(s"_build-${java.util.UUID.randomUUID()}")
+          try {
+            c().coalesce(1).write.mode("overwrite").parquet(build.toString)
+            val bl = Files.list(build)
+            val part =
+              try bl.iterator().asScala
+                .find(_.getFileName.toString.endsWith(".parquet"))
+                .getOrElse(sys.error(s"no part file staged under $build"))
+              finally bl.close()
+            val target = staged.resolve(f"chunk_$i%02d.parquet")
+            Files.move(part, target,
+              StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+            // strictly increasing mtimes pin the delivery order
+            Files.setLastModifiedTime(
+              target, java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
+          } finally graft.Staging.delete(build.toFile)
+        }
+        val metaTmp = staged.resolve(s"._staging_meta.tmp-${java.util.UUID.randomUUID()}")
+        Files.write(metaTmp, sig.getBytes(UTF_8))
+        Files.move(metaTmp, meta,
           StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-        // strictly increasing mtimes pin the delivery order
-        Files.setLastModifiedTime(
-          target, java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
-        val dl = Files.list(build)
-        try dl.iterator().asScala.foreach(p => Files.deleteIfExists(p))
-        finally dl.close()
-        Files.deleteIfExists(build)
-        ()
       }
-      val metaTmp = staged.resolve(s"._staging_meta.tmp-${java.util.UUID.randomUUID()}")
-      Files.write(metaTmp, sig.getBytes(UTF_8))
-      Files.move(metaTmp, meta,
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-      ()
+      stagedSchemas.getOrElseUpdate(
+        (staged.toString, sig), spark.read.parquet(staged.toString).schema)
     }
-    val schema = spark.read.parquet(staged.toString).schema
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(staged.toString)
   }
 
-  private val stageLock = new Object
+  private val stageLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
+
+  /** Staged schema per (staged dir, sig): session metadata, not a
+    * memoized result, so a memo clear keeps it. A re-staging under a
+    * new `sig` reads its schema afresh. */
+  private val stagedSchemas =
+    scala.collection.concurrent.TrieMap.empty[(String, String), org.apache.spark.sql.types.StructType]
 
   /** The events table with a stream-ready instant `ts` (naive micros
     * interpreted as UTC — the `ts` rule `StreamDemos.eventsStream`

@@ -20,6 +20,7 @@ class SessionsSpec extends SparkSuite {
     assert(conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
     assert(conf.get("spark.cleaner.periodicGC.interval") == "1min")
     assert(conf.get("spark.scheduler.mode") == "FAIR")
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
   test("src/main reads exactly the allowed spark.graft.* keys") {

@@ -462,4 +462,73 @@ class StatefulSpec extends SparkSuite {
     assert(got.nonEmpty && got == batch,
       s"${(got diff batch).size} extra, ${(batch diff got).size} missing of ${batch.size}")
   }
+
+  test("a second chunked stream over an already-staged source starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    streaming.StatefulDemos.chunkedEventsStream(spark, sf) // stages, or finds it staged
+    val probeJobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("graft_stage_probe")  => probeJobs.incrementAndGet(); ()
+          case Some("graft_stage_marker") => markerSeen.countDown()
+          case _                          => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft_stage_probe", "second open of a staged source")
+      try streaming.StatefulDemos.chunkedEventsStream(spark, sf)
+      finally sc.clearJobGroup()
+      // the listener bus delivers in order: once the marker job's start
+      // arrives, every job the probe started has been counted
+      sc.setJobGroup("graft_stage_marker", "listener bus barrier")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(probeJobs.get == 0, s"${probeJobs.get} jobs opening an already-staged source")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a chunked source regenerated in place is re-staged, never served stale") {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_chunk_restage")
+    val staged = java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir"), "graft_stream_chunks",
+      "events_tsplit_" + dir.toString.replaceAll("[^a-zA-Z0-9]", "_"))
+    def rmTree(p: java.nio.file.Path): Unit =
+      if (Files.exists(p)) Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    try {
+      val table = dir.resolve("events.parquet")
+      Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"), table)
+      var run = 0
+      def streamedIds(): Set[Long] = {
+        run += 1
+        emissions(
+          spark,
+          streaming.StatefulDemos.chunkedEventsStream(spark, dir.toString).select(col("event_id")),
+          s"t_chunk_restage_$run", "append")
+          .map(_.head.asInstanceOf[Long]).toSet
+      }
+      val events = Tables.events(spark, sf)
+      val all = events.select(col("event_id")).collect().map(_.getLong(0)).toSet
+      assert(streamedIds() == all)
+      val subset = events.filter(col("event_id") % 2 === 0)
+      val subsetIds = subset.select(col("event_id")).collect().map(_.getLong(0)).toSet
+      assert(subsetIds.nonEmpty && subsetIds.size < all.size, "subset must be strict and non-empty")
+      val written = dir.resolve("subset")
+      subset.coalesce(1).write.parquet(written.toString)
+      val part = Files.list(written).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, table, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val got = streamedIds()
+      if (got != subsetIds)
+        fail(s"the chunked replay served the stale staged copy: ${got.size} ids, ${subsetIds.size} in the subset")
+    } finally {
+      rmTree(dir)
+      rmTree(staged)
+    }
+  }
 }

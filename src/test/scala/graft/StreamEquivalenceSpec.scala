@@ -29,4 +29,31 @@ class StreamEquivalenceSpec extends SparkSuite {
     assert(names.nonEmpty && names.distinct == names, s"machine names: $names")
     assert(names.sorted == oracleNames(StreamEquivalence.streamStateApiParity).sorted)
   }
+
+  test("a replay session checkpoints through the FileSystem-based manager") {
+    import org.apache.spark.sql.execution.streaming.checkpointing.{
+      CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    val s = StreamEquivalence.replaySession(spark)
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_mgr")
+    try {
+      // Spark 4.1 adds its checksum wrapper in the state store, not here
+      val mgr = CheckpointFileManager.create(
+        new org.apache.hadoop.fs.Path(dir.toString), s.sessionState.newHadoopConf())
+      assert(mgr.isInstanceOf[FileSystemBasedCheckpointFileManager], s"got ${mgr.getClass}")
+    } finally java.nio.file.Files.deleteIfExists(dir)
+  }
+
+  test("replay sessions share one codegen cache") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // compiles added by running one whole-stage plan in a fresh replay session
+    def compiles(): Long = {
+      val s = StreamEquivalence.replaySession(spark)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      s.range(0, 1000, 1, 2).selectExpr("id * 7919 % 613 AS k").filter("k > 17").collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiles()
+    assert(compiles() == 0, "a second replay session recompiled the same plan")
+  }
 }
